@@ -105,6 +105,28 @@ final class TopKBuffer(val k: Int, val distinct: Boolean = false) {
     while (i < size) { out(i) = (ids(i), dists(i)); i += 1 }
     out.sortBy { case (id, d) => (d, id) }
   }
+
+  /** Bytes [[writeTo]] appends. */
+  def byteSize: Int = 9 + size * 16
+
+  /** Append `k, distinct, size, (dist, id)*` — the aggregate-buffer codec. */
+  def writeTo(bb: ByteBuffer): Unit = {
+    bb.putInt(k).put(if (distinct) 1.toByte else 0.toByte).putInt(size)
+    var i = 0
+    while (i < size) { bb.putDouble(dists(i)).putLong(ids(i)); i += 1 }
+  }
+}
+
+object TopKBuffer {
+
+  /** Read one buffer written by [[TopKBuffer.writeTo]]. */
+  def readFrom(bb: ByteBuffer): TopKBuffer = {
+    val buf = new TopKBuffer(bb.getInt(), bb.get() == 1.toByte)
+    val n = bb.getInt()
+    var i = 0
+    while (i < n) { buf.insert(bb.getDouble(), bb.getLong()); i += 1 }
+    buf
+  }
 }
 
 /** `topk(id, dist, k)` → `array<struct<id bigint, dist double>>`, the k
@@ -158,21 +180,13 @@ case class TopKByDistance(
   }
 
   override def serialize(buf: TopKBuffer): Array[Byte] = {
-    val bb = ByteBuffer.allocate(9 + buf.size * 16)
-    bb.putInt(buf.k).put(if (buf.distinct) 1.toByte else 0.toByte).putInt(buf.size)
-    var i = 0
-    while (i < buf.size) { bb.putDouble(buf.dists(i)).putLong(buf.ids(i)); i += 1 }
+    val bb = ByteBuffer.allocate(buf.byteSize)
+    buf.writeTo(bb)
     bb.array()
   }
 
-  override def deserialize(bytes: Array[Byte]): TopKBuffer = {
-    val bb = ByteBuffer.wrap(bytes)
-    val buf = new TopKBuffer(bb.getInt(), bb.get() == 1.toByte)
-    val n = bb.getInt()
-    var i = 0
-    while (i < n) { buf.insert(bb.getDouble(), bb.getLong()); i += 1 }
-    buf
-  }
+  override def deserialize(bytes: Array[Byte]): TopKBuffer =
+    TopKBuffer.readFrom(ByteBuffer.wrap(bytes))
 
   override def withNewMutableAggBufferOffset(newOffset: Int): TopKByDistance =
     copy(mutableAggBufferOffset = newOffset)

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{dist, TopKByDistance}
+import graft.functions.{dist, ScanTopK, TopKByDistance}
 
 /** Exact k-NN search (reference Q1/Q2/Q12 semantics: top-k by distance,
   * ascending, ties on id — `AnnService/inc/Core/SearchQuery.h:150-254`,
@@ -32,7 +32,7 @@ object Knn {
     * distances — for callers that merge further (scatter-gather) before the
     * final rounded projection.
     *
-    * Plan: ONE scan of the corpus through [[graft.functions.BatchTopK]] (all
+    * Plan: ONE scan of the corpus through [[graft.functions.ScanTopK]] (all
     * queries ride inside the aggregate; per-query bounded buffers update
     * map-side). The broadcast-join formulation ([[searchAggViaJoin]])
     * materializes a joined row per (query, vector) pair first — same
@@ -43,12 +43,9 @@ object Knn {
       corpus: DataFrame,
       k: Int,
       metric: String = "l2sq"): DataFrame = {
-    import graft.functions.BatchTopK
-    val (qids, qvecs) = BatchTopK.collectQueries(queries)
-    corpus
-      .agg(BatchTopK.batchTopk(col("id"), col("vec"), qids, qvecs, k, metric).as("per_q"))
-      .select(explode(col("per_q")).as("r"))
-      .select(col("r.query_id").as("query_id"), col("r.nn").as("nn"))
+    val (qids, qvecs) = ScanTopK.collectQueries(queries)
+    ScanTopK.nearest(corpus, Seq(col("id"), col("vec")), qids,
+      ScanTopK.Exact(qvecs, metric), ScanTopK.AllQueries, k)
   }
 
   /** Join-formulated [[searchAgg]] — kept as the reference dataflow (tested

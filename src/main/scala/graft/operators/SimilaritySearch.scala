@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Hash60
+import graft.functions.{Hash60, ScanTopK}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`ARRAY<FLOAT>`). Three tiers:
@@ -235,9 +235,9 @@ object SimilaritySearch {
 
   /** Hard-negative mining for contrastive training: for each anchor, the k
     * nearest corpus vectors with a DIFFERENT label. ONE label-aware bounded
-    * top-k corpus scan ([[graft.functions.LabeledBatchTopK]]): every anchor
-    * rides inside the aggregate with its label, each corpus row updates the
-    * anchors whose label differs, and no per-label pass or per-pair
+    * top-k corpus scan ([[graft.functions.ScanTopK]] routed by label): every
+    * anchor rides inside the aggregate with its label, each corpus row
+    * updates the anchors whose label differs, and no per-label pass or per-pair
     * label-predicate join ever forms — the scan count is 1 regardless of
     * how many classes exist (pre-r10 this looped one `batch_topk` scan per
     * label value; same result, |labels|× the corpus reads).
@@ -246,25 +246,34 @@ object SimilaritySearch {
       vectors: DataFrame, // (id, vec, label)
       k: Int,
       metric: String = "cos"): DataFrame = {
-    import graft.functions.LabeledBatchTopK
-    val (qids, qvecs, qlabels) = LabeledBatchTopK.collectQueries(
-      vectors.select(col("id").as("query_id"), col("vec").as("qvec"),
-        col("label").as("qlabel")))
-    Knn.explodeRanked(
-      vectors
-        .agg(LabeledBatchTopK.labeledBatchTopk(col("id"), col("vec"),
-          col("label"), qids, qvecs, qlabels, 0, k, metric).as("per_q"))
-        .select(explode(col("per_q")).as("r"))
-        .select(col("r.query_id").as("query_id"), col("r.neg").as("nn")))
+    val (qids, scorer, byLabel) = labeledAnchors(vectors, metric)
+    Knn.explodeRanked(ScanTopK.nearest(vectors, labeledCols, qids, scorer,
+      ScanTopK.OtherKey(byLabel), k))
   }
+
+  /** The anchors of a labeled `(id, vec, label)` frame: sorted ids, their
+    * exact scorer, and the label → anchors index the mining routers use.
+    */
+  private def labeledAnchors(vectors: DataFrame, metric: String)
+      : (Array[Long], ScanTopK.Exact, ScanTopK.KeyIndex) = {
+    val (qids, anchors) = ScanTopK.collectSorted(
+      vectors.select(col("id"), col("vec"), col("label"))) { r =>
+      (ScanTopK.doubles(r.getSeq[Any](1)), r.get(2).asInstanceOf[Number].longValue)
+    }
+    (qids, ScanTopK.Exact(anchors.map(_._1), metric),
+      ScanTopK.KeyIndex.of(anchors.map(_._2), anchors.indices.toArray))
+  }
+
+  private def labeledCols = Seq(col("label"), col("id"), col("vec"))
 
   /** Triplet mining for contrastive training: for every anchor, its nearest
     * SAME-label member (the positive, self excluded) and its nearest
     * DIFFERENT-label member (the hard negative — [[hardNegatives]] at
     * k = 1), plus the margin `neg_dist − pos_dist` (negative margin = the
     * hard triplet a metric-learning loss actually moves). Both buffers fill
-    * in the SAME single label-aware corpus scan
-    * ([[graft.functions.LabeledBatchTopK]] with kPos = kNeg = 1) — pre-r10
+    * in the SAME single label-aware corpus scan (two
+    * [[graft.functions.ScanTopK]] columns, same-label and other-label routed,
+    * k = 1, in one aggregate) — pre-r10
     * this was two per-label scan loops. Anchors whose class is a singleton
     * (no possible positive) drop out, as do anchors when only one class
     * exists — the inner-join semantics of the original formulation.
@@ -275,20 +284,18 @@ object SimilaritySearch {
   def tripletMine(
       vectors: DataFrame, // (id, vec, label)
       metric: String = "cos"): DataFrame = {
-    import graft.functions.LabeledBatchTopK
-    val (qids, qvecs, qlabels) = LabeledBatchTopK.collectQueries(
-      vectors.select(col("id").as("query_id"), col("vec").as("qvec"),
-        col("label").as("qlabel")))
+    val (qids, scorer, byLabel) = labeledAnchors(vectors, metric)
     vectors
-      .agg(LabeledBatchTopK.labeledBatchTopk(col("id"), col("vec"),
-        col("label"), qids, qvecs, qlabels, 1, 1, metric).as("per_q"))
-      .select(explode(col("per_q")).as("r"))
-      .where(size(col("r.pos")) > 0 && size(col("r.neg")) > 0)
-      .select(col("r.query_id").as("anchor"),
-        col("r.pos")(0).getField("id").as("pos_id"),
-        round(col("r.pos")(0).getField("dist"), 4).as("pos_dist"),
-        col("r.neg")(0).getField("id").as("neg_id"),
-        round(col("r.neg")(0).getField("dist"), 4).as("neg_dist"))
+      .agg(
+        ScanTopK.column(labeledCols, qids, scorer, ScanTopK.SameKey(byLabel), 1).as("pos"),
+        ScanTopK.column(labeledCols, qids, scorer, ScanTopK.OtherKey(byLabel), 1).as("neg"))
+      .select(explode(arrays_zip(col("pos"), col("neg"))).as("r"))
+      .where(size(col("r.pos.nn")) > 0 && size(col("r.neg.nn")) > 0)
+      .select(col("r.pos.query_id").as("anchor"),
+        col("r.pos.nn")(0).getField("id").as("pos_id"),
+        round(col("r.pos.nn")(0).getField("dist"), 4).as("pos_dist"),
+        col("r.neg.nn")(0).getField("id").as("neg_id"),
+        round(col("r.neg.nn")(0).getField("dist"), 4).as("neg_dist"))
       .withColumn("margin", round(col("neg_dist") - col("pos_dist"), 4))
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{dist, RngPrune, TopKByDistance}
+import graft.functions.{dist, RngPrune, ScanTopK, TopKByDistance}
 
 /** SPANN-shaped index build + two-stage search — the Spark-native flagship
   * (SURVEY.md §7). Heads (cluster centroids / selected vectors) stay small and
@@ -741,27 +741,16 @@ object Spann {
     // partition-pruned (no head_bucket key — the in-memory/checkpointed
     // index form) and no metadata filter applies, the whole stage-2 —
     // probe + exact distance + replica-deduped bounded top-k — runs as ONE
-    // aggregate over the posting scan ([[graft.functions.SpannProbeTopK]]).
+    // aggregate over the posting scan ([[fusedStage2]]).
     // The stage-1 candidates and the query batch ride inside the aggregate
     // (both bounded by the batch-query contract), so no joined row is ever
     // materialized and no per-row group-hash is paid. The bucketed
     // (disk-resident) form keeps the join: dynamic partition pruning skips
     // whole posting buckets there, which is worth more than the fusion at
     // scale; the idFilter form keeps the join for the semi-join pushdown.
-    if (idFilter.isEmpty && joinKeys == Seq("head_id")) {
-      val (qids, qvecs) = graft.functions.BatchTopK.collectQueries(queries)
-      val pairs = cand.select(col("query_id").cast("long"), col("head_id").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      val (pHeads, pOff, pIdx) =
-        graft.functions.SpannProbeTopK.buildProbeIndex(pairs, qids)
-      val agged = postings
-        .agg(graft.functions.SpannProbeTopK.probeTopk(
-          col("head_id"), col("id"), col("vec"),
-          qids, qvecs, pHeads, pOff, pIdx, k, metric).as("per_q"))
-        .select(explode(col("per_q")).as("r"))
-        .select(col("r.query_id").as("query_id"), col("r.nn").as("nn"))
-      return Knn.explodeRanked(agged)
-    }
+    if (idFilter.isEmpty && joinKeys == Seq("head_id"))
+      return fusedStage2(cand, postings, queries, col("vec"), k)(
+        ScanTopK.Exact(_, metric))
     val probed = cand.join(postings, joinKeys)
     val kept = idFilter match {
       case Some(f) => probed.join(f.select(col("id")), Seq("id"), "left_semi")
@@ -847,27 +836,16 @@ object Spann {
       idFilter: Option[DataFrame] = None): DataFrame = {
     // FUSED compressed probe (r16, the [[stage2]] fusion with LUT scoring):
     // unbucketed + unfiltered stage-2 runs as ONE aggregate over the coded
-    // posting scan ([[graft.functions.SpannProbeLutTopK]]); the LUTs are
+    // posting scan ([[fusedStage2]] with a LUT scorer); the LUTs are
     // built by the same adcLut/rotate code the per-query UDF ran, scored
     // with the same left-to-right sum — bit-identical (SpannSpec pins it).
     // Bucketed form keeps the DPP join; idFilter keeps the semi-join.
-    if (idFilter.isEmpty && joinKeys == Seq("head_id")) {
-      val (qids, qvecs) = graft.functions.BatchTopK.collectQueries(queries)
-      val luts = qvecs.map(q => rcb.cb.adcLut(
-        scala.collection.immutable.ArraySeq.unsafeWrapArray(
-          rcb.rotate(scala.collection.immutable.ArraySeq.unsafeWrapArray(q)))))
-      val pairs = cand.select(col("query_id").cast("long"), col("head_id").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      val (pHeads, pOff, pIdx) =
-        graft.functions.SpannProbeTopK.buildProbeIndex(pairs, qids)
-      val agged = codedPostings
-        .agg(graft.functions.SpannProbeLutTopK.probeLutTopk(
-          col("head_id"), col("id"), col("codes"),
-          qids, luts, pHeads, pOff, pIdx, k).as("per_q"))
-        .select(explode(col("per_q")).as("r"))
-        .select(col("r.query_id").as("query_id"), col("r.nn").as("nn"))
-      return Knn.explodeRanked(agged)
-    }
+    if (idFilter.isEmpty && joinKeys == Seq("head_id"))
+      return fusedStage2(cand, codedPostings, queries, col("codes"), k) { qvecs =>
+        ScanTopK.Lut(qvecs.map(q => rcb.cb.adcLut(
+          scala.collection.immutable.ArraySeq.unsafeWrapArray(
+            rcb.rotate(scala.collection.immutable.ArraySeq.unsafeWrapArray(q))))))
+      }
     val spark = queries.sparkSession
     val bc = spark.sparkContext.broadcast(rcb)
     val lutUdf = udf((q: Seq[Double]) => bc.value.cb.adcLut(
@@ -889,6 +867,24 @@ object Spann {
     Knn.explodeRanked(
       hits.groupBy(col("query_id"))
         .agg(TopKByDistance.topkDistinct(col("id"), col("pdist"), k).as("nn")))
+  }
+
+  /** The fused stage-2 shared by [[stage2]] and [[adcStage2]]: probe, score
+    * and replica-deduped bounded top-k as ONE [[ScanTopK]] over the posting
+    * scan, routed by `head_id` through the stage-1 candidates. `payload` is
+    * the posting column the scorer reads (`vec` or `codes`); `scorer`
+    * builds it from the collected query vectors.
+    */
+  private def fusedStage2(
+      cand: DataFrame,
+      postings: DataFrame,
+      queries: DataFrame,
+      payload: Column,
+      k: Int)(scorer: Array[Array[Double]] => ScanTopK.Scorer): DataFrame = {
+    val (qids, qvecs) = ScanTopK.collectQueries(queries)
+    Knn.explodeRanked(ScanTopK.nearest(postings,
+      Seq(col("head_id"), col("id"), payload), qids, scorer(qvecs),
+      ScanTopK.probeRoute(cand, qids), k))
   }
 
   /** Route each head to its `routeReplicas` nearest super-heads — the
@@ -1037,7 +1033,7 @@ object Spann {
     // expression per query row; nn arrives (dist, id)-sorted, so nn[0] is
     // the per-query best distance — no window needed for the ratio prune.
     // An over-budget head set routes automatically to the inverted shape:
-    // the bounded query batch rides INSIDE a [[graft.functions.BatchTopK]]
+    // the bounded query batch rides INSIDE a [[graft.functions.ScanTopK]]
     // aggregate over one scan of the heads frame — no head collect or
     // broadcast at any size (past THAT, the hier route in [[graft.AnnIndex]]
     // bounds the per-query candidate set too)
@@ -1045,11 +1041,9 @@ object Spann {
       heads, col("qvec"), probeK, metric, maxHeadRows) match {
       case Some(nn) => queries.select(col("query_id"), nn.as("nn"))
       case None =>
-        val (qids, qvecs) = graft.functions.BatchTopK.collectQueries(queries)
-        heads.agg(graft.functions.BatchTopK.batchTopk(
-          col("head_id"), col("head_vec"), qids, qvecs, probeK, metric).as("b"))
-          .select(explode(col("b")).as("qr"))
-          .select(col("qr.query_id").as("query_id"), col("qr.nn").as("nn"))
+        val (qids, qvecs) = ScanTopK.collectQueries(queries)
+        ScanTopK.nearest(heads, Seq(col("head_id"), col("head_vec")), qids,
+          ScanTopK.Exact(qvecs, metric), ScanTopK.AllQueries, probeK)
     }
     val exploded = withNN
       .select(col("query_id"),

@@ -22,6 +22,12 @@ class KnnSpec extends SparkSpec {
     }
   }
 
+  test("a repeated query_id fails with a named IllegalArgumentException") {
+    val q = synthQueries().union(synthQueries().where(col("query_id") === 1))
+    val e = intercept[IllegalArgumentException](Knn.search(q, synthVectors(), 3))
+    assert(e.getMessage.contains("duplicate query_id 1"), e.getMessage)
+  }
+
   test("aggregate plan ≡ window plan (same rows)") {
     val a = Knn.search(synthQueries(), synthVectors(), 5)
     val b = Knn.searchViaWindow(synthQueries(), synthVectors(), 5)

@@ -95,8 +95,21 @@ class PQSpec extends SparkSpec {
     assert(viaSdc === viaAdc)
   }
 
+  test("codes from another codebook fail with a named IllegalArgumentException") {
+    // codes carry m = 3 subspaces; the m = 2 codebook's LUTs have 2 rows
+    val cb3 = PQ.train(corpus, dim = 6, m = 3, k = 8, maxIter = 2)
+    val cb2 = PQ.train(corpus, dim = 6, m = 2, k = 8, maxIter = 2)
+    val quant = PQ.quantize(corpus, cb3).select(col("id"), col("codes"))
+    val e = intercept[Exception](PQ.adcSearch(queries, quant, cb2, 5).collect())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toList
+    assert(!chain.exists(_.isInstanceOf[ArrayIndexOutOfBoundsException]), chain)
+    val iae = chain.collectFirst { case x: IllegalArgumentException => x }
+    assert(iae.exists(x => x.getMessage.contains("codes length 3") &&
+      x.getMessage.contains("m = 2")), chain)
+  }
+
   test("LUT batch aggregate ≡ crossJoin+LUT-expression forms, bit-exact (r16)") {
-    // r16: adc/sdc/rvq search run as ONE LutBatchTopK aggregate; this pins
+    // r16: adc/sdc/rvq search run as ONE ScanTopK LUT aggregate; this pins
     // each against the former crossJoin + per-pair-expression plan — same
     // rows, ranks AND distance doubles
     import graft.functions.{LutCodesDistExpr, RvqLutDistExpr, TopKByDistance}

@@ -24,7 +24,7 @@ class SpannSpec extends SparkSpec {
   }
 
   test("fused stage-2 probe ≡ join-formulated stage-2, bit-exact (r16 fusion)") {
-    // r16: the unbucketed/unfiltered stage-2 runs as ONE SpannProbeTopK
+    // r16: the unbucketed/unfiltered stage-2 runs as ONE ScanTopK (probe router)
     // aggregate; this pins it against the former join+ObjectHashAggregate
     // form — same rows, ranks AND the same distance doubles (4dp-rounded by
     // the shared explodeRanked, so compare pre-round via the raw buffers:
@@ -51,6 +51,18 @@ class SpannSpec extends SparkSpec {
           (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
       assert(fused === ref, s"metric $metric")
     }
+  }
+
+  test("a candidate query_id outside the query batch fails with a named IAE") {
+    import spark.implicits._
+    val heads = Spann.selectHeadsModulo(corpus, 50)
+    val postings = Spann.buildPostings(corpus, heads, 4)
+    val cand = Seq((-7L, heads.select("head_id").head().getLong(0)))
+      .toDF("query_id", "head_id")
+    val e = intercept[IllegalArgumentException](
+      Spann.searchFromCandidates(cand, queries, postings, 10))
+    assert(e.getMessage.contains("query_id -7") &&
+      e.getMessage.contains("fused SPANN probe"), e.getMessage)
   }
 
   test("fused ADC stage-2 ≡ join-formulated compressed stage-2, bit-exact (r16)") {

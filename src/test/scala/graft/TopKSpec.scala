@@ -13,6 +13,24 @@ class TopKSpec extends SparkSpec {
     assert(buf.sorted.toSeq === Seq((2L, 1.0), (4L, 2.0), (3L, 3.0)))
   }
 
+  test("scan-top-k routers hand out the right query slices") {
+    import graft.functions.ScanTopK.{KeyIndex, OtherKey, Probe, SameKey}
+    // keys 30, 10, 30(dup), 20 → sorted CSR with the duplicate collapsed
+    val idx = KeyIndex.of(Array(30L, 10L, 30L, 20L, 10L), Array(2, 1, 2, 0, 3))
+    assert(idx.keys.toSeq === Seq(10L, 20L, 30L))
+    assert(idx.offsets.toSeq === Seq(0, 2, 3, 4))
+    assert(idx.qIdx.toSeq === Seq(1, 3, 0, 2))
+    val qids = Array(100L, 101L, 102L, 103L)
+    val spans = new Array[Int](4)
+    def slices(n: Int) = (0 until n).map(s => idx.qIdx.slice(spans(2 * s), spans(2 * s + 1)).toSeq)
+    assert(slices(Probe(idx).route(10L, -1L, qids, spans)) === Seq(Seq(1, 3)))
+    assert(Probe(idx).route(99L, -1L, qids, spans) === 0)
+    // row 103 is anchor 3: its own slot is skipped
+    assert(slices(SameKey(idx).route(10L, 103L, qids, spans)).flatten === Seq(1))
+    assert(slices(OtherKey(idx).route(10L, 103L, qids, spans)).flatten === Seq(0, 2))
+    assert(slices(OtherKey(idx).route(99L, 103L, qids, spans)).flatten === Seq(1, 3, 0, 2))
+  }
+
   test("ties break on id ascending") {
     val buf = new TopKBuffer(2)
     Seq((1.0, 9L), (1.0, 3L), (1.0, 7L)).foreach { case (d, id) => buf.insert(d, id) }

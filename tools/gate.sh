@@ -2,13 +2,15 @@
 # THE correctness gate — one entry point that produces the committable
 # CORRECTNESS artifact from the CURRENT tree:
 #
-#   bash tools/gate.sh [round-tag] [sfDir]
+#   bash tools/gate.sh [tag] [sfDir]
 #
 # Runs graft.Verify (every SparkEntry.queries entry → parquet dump +
 # oracle_sql.json), then tools/compare_oracle.py (DuckDB replays each oracle,
-# hash-compares), and writes CORRECTNESS_local_<tag>.json ATOMICALLY (tmp +
-# rename) so a killed run never leaves a half-written artifact. Exit status
-# is non-zero unless every query verdict is ok.
+# hash-compares), and writes CORRECTNESS_local.json ATOMICALLY (tmp +
+# rename) so a killed run never leaves a half-written artifact. The artifact
+# (and TYPES_local.json) is one rolling file, overwritten on each run; the
+# tag only names the /tmp work dir. Exit status is non-zero unless every
+# query verdict is ok.
 #
 # Total ≈ 7 min at sf0.01 on a quiet host (Verify ≈ 4 min, compare ≈ 3 min).
 set -u
@@ -16,7 +18,7 @@ cd /root/repo
 TAG=${1:-r_local}
 SF=${2:-/root/testdata/sf0.01}
 OUT=/tmp/graft_gate_${TAG}
-SUMMARY=CORRECTNESS_local_${TAG}.json
+SUMMARY=CORRECTNESS_local.json
 rm -rf "$OUT"
 echo "[gate] Verify → $OUT (sf=$SF)"
 sbt -batch "runMain graft.Verify $SF $OUT" > /tmp/graft_gate_verify.log 2>&1
@@ -25,7 +27,7 @@ if [ ! -f "$OUT/oracle_sql.json" ]; then
   exit 2
 fi
 echo "[gate] static dtype-pairing check (check_oracle_types.py)"
-TYPES=TYPES_local_${TAG}.json
+TYPES=TYPES_local.json
 python3 tools/check_oracle_types.py "$SF" "$OUT" --selftest \
   --report "${TYPES}.tmp"
 if [ $? -ne 0 ]; then
