@@ -42,9 +42,22 @@ class AnnIndex private (
     new AnnIndex(spark, conf, vectors, deleted, heads, postings, quantizer,
       headCountHint, storedCodes)
 
-  def setParameter(name: String, value: String): AnnIndex =
-    new AnnIndex(spark, conf.set(name, value), vectors, deleted, heads, postings,
+  /** Set one registry parameter. Postings carrying IndexStore's
+    * `head_bucket` column were bucketed by the current `HeadBuckets`; a new
+    * count would bucket stage-1 candidates and added rows differently, and
+    * the `(head_bucket, head_id)` join would silently drop heads — refused.
+    */
+  def setParameter(name: String, value: String): AnnIndex = {
+    val next = conf.set(name, value)
+    if (next.headBuckets != conf.headBuckets &&
+        postings.exists(_.columns.contains("head_bucket")))
+      throw new IllegalArgumentException(
+        s"HeadBuckets ${next.headBuckets} does not match the ${conf.headBuckets} " +
+          "buckets the stored postings were partitioned by; build() the index " +
+          "again to change the bucket count")
+    new AnnIndex(spark, next, vectors, deleted, heads, postings,
       quantizer, headCountHint, storedCodes)
+  }
   def getParameter(name: String): String = conf.get(name)
 
   def count: Long = Mutations.liveView(vectors, deleted).count()
@@ -149,25 +162,8 @@ class AnnIndex private (
     * beyond `conf.hierThreshold` route through super-heads automatically
     * (never a full-head broadcast).
     */
-  def search(queries: DataFrame, k: Int): DataFrame = {
-    val (h, p) = requireBuilt()
-    val live = p.join(deleted, Seq("id"), "left_anti")
-    hierState match {
-      case Some((sh, routing)) =>
-        Spann.searchTwoStageHier(
-          queries, sh, routing, live, k, conf.internalK, conf.superK, conf.metric)
-      case None =>
-        // a loaded index keeps IndexStore's head_bucket partition column →
-        // the bucketed join enables dynamic partition pruning of the scan.
-        // conf.wideK > 0 engages the adaptive stage-1 widening (dense-region
-        // queries probe extra close-ranked heads; the hier route has its own
-        // superK recall knob instead)
-        val buckets = if (p.columns.contains("head_bucket")) Some(conf.headBuckets) else None
-        Spann.searchTwoStage(
-          queries, h, live, k, conf.internalK, conf.maxDistRatio, conf.metric,
-          buckets, conf.wideK, conf.closeRatio)
-    }
-  }
+  def search(queries: DataFrame, k: Int): DataFrame =
+    searchSpann(queries, k, requireBuilt()._2, Spann.Payload.exact(conf.metric))
 
   /** Filtered SPANN search — Q4 on the approximate path (the reference
     * evaluates a metadata filter before inserting candidates into the
@@ -180,21 +176,35 @@ class AnnIndex private (
     * recall under highly selective predicates is bounded by what the probed
     * heads contain — widen `InternalK`/`WideK` for such workloads.
     */
-  def searchFiltered(queries: DataFrame, k: Int, predicate: Column): DataFrame = {
-    val (h, p) = requireBuilt()
-    val live = p.join(deleted, Seq("id"), "left_anti")
-    val keep = Mutations.liveView(vectors, deleted).where(predicate).select(col("id"))
-    hierState match {
+  def searchFiltered(queries: DataFrame, k: Int, predicate: Column): DataFrame =
+    searchSpann(queries, k, requireBuilt()._2, Spann.Payload.exact(conf.metric),
+      Some(Mutations.liveView(vectors, deleted).where(predicate).select(col("id"))))
+
+  /** The one SPANN search path behind [[search]], [[searchFiltered]] and
+    * [[searchAdc]]: stage-1 picks candidate heads — routed through
+    * super-heads past `conf.hierThreshold`, else the flat head scan with the
+    * `InternalK`/`MaxDistRatio` prune and the `WideK`/`CloseRatio`
+    * widening — then the shared stage-2 scores the live rows of the posting
+    * `table` with `payload`. The flat route passes the bucket count, so a loaded index's
+    * `head_bucket` column turns on dynamic partition pruning of the posting
+    * scan; the hier route has its own `SuperK` recall knob instead.
+    */
+  private def searchSpann(
+      queries: DataFrame,
+      k: Int,
+      table: DataFrame,
+      payload: Spann.Payload,
+      idFilter: Option[DataFrame] = None): DataFrame = {
+    val live = table.join(deleted, Seq("id"), "left_anti")
+    val (cand, buckets) = hierState match {
       case Some((sh, routing)) =>
-        Spann.searchTwoStageHier(
-          queries, sh, routing, live, k, conf.internalK, conf.superK, conf.metric,
-          idFilter = Some(keep))
+        (Spann.candidateHeadsHier(
+          queries, sh, routing, conf.internalK, conf.superK, conf.metric), None)
       case None =>
-        val buckets = if (p.columns.contains("head_bucket")) Some(conf.headBuckets) else None
-        Spann.searchTwoStage(
-          queries, h, live, k, conf.internalK, conf.maxDistRatio, conf.metric,
-          buckets, conf.wideK, conf.closeRatio, idFilter = Some(keep))
+        (Spann.candidateHeads(queries, heads.get, conf.internalK, conf.maxDistRatio,
+          conf.metric, conf.wideK, conf.closeRatio), Some(conf.headBuckets))
     }
+    Spann.stage2(cand, queries, live, k, buckets, payload, idFilter)
   }
 
   /** Exact search — the truth path (brute force, always available). */
@@ -292,23 +302,12 @@ class AnnIndex private (
     * of the stored codes (still no per-call re-quantization).
     */
   def searchAdc(queries: DataFrame, k: Int): DataFrame = {
-    import graft.functions.PQ
     val q = quantizer.getOrElse(sys.error("no quantizer — call trainQuantizer() first"))
     (heads, codedPostings) match {
-      case (Some(h), Some(cp)) =>
-        val live = cp.join(deleted, Seq("id"), "left_anti")
-        hierState match {
-          case Some((sh, routing)) =>
-            Spann.searchTwoStageHierAdc(
-              queries, sh, routing, live, q, k, conf.internalK, conf.superK, conf.metric)
-          case None =>
-            val buckets = if (cp.columns.contains("head_bucket")) Some(conf.headBuckets) else None
-            Spann.searchTwoStageAdc(
-              queries, h, live, q, k, conf.internalK, conf.maxDistRatio, conf.metric, buckets)
-        }
+      case (Some(_), Some(cp)) => searchSpann(queries, k, cp, Spann.Payload.adc(q))
       case _ =>
         val live = codesTable.get.join(deleted, Seq("id"), "left_anti")
-        PQ.adcSearchOpq(queries, live, q, k)
+        graft.functions.PQ.adcSearchOpq(queries, live, q, k)
     }
   }
 

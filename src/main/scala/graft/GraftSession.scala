@@ -17,9 +17,10 @@ object GraftSession {
     *  - artifact.isolation=false: Spark 4 keys the generated-code cache by
     *    the session's artifact classloader; with per-session isolation on
     *    (the default), every fresh child session re-Janino-compiles every
-    *    operator (~0.3-0.5 s per q33-sized query, CodeGenerator.compileTime,
-    *    ProfileQ33h). This engine registers no session-scoped artifacts, so
-    *    isolation buys nothing — all sessions share compiled classes. NOTE:
+    *    operator (~0.3-0.5 s per q33-sized query, CodeGenerator.compileTime;
+    *    OPTIMIZATION_r15.md, Session 2 Wave E). This engine registers no
+    *    session-scoped artifacts, so isolation buys nothing — all sessions
+    *    share compiled classes. NOTE:
     *    static conf — if a future feature registers session UDF artifacts,
     *    revisit (classes would silently share across sessions).
     *  - objectHashAggregate fallback threshold: bounded top-k aggregates run

@@ -123,8 +123,9 @@ object PQ {
     * bit-identical — only the hot-loop cost changes (m·dsub → m per pair).
     */
   /** LUT×codes scoring kernel — ONE definition shared by [[adcSearch]] and
-    * SPANN's compressed stage-2 (`Spann.adcStage2`), so a fix to the ADC hot
-    * loop can never apply to one path and not the other. A codegen
+    * the join form of SPANN's compressed stage-2 (`Spann.Payload.adc`), so
+    * a fix to the ADC hot loop can never apply to one path and not the
+    * other. A codegen
     * expression since r15: the Scala-UDF form materialized the LUT as a
     * boxed Seq[Seq[Double]] once per (query, vector) pair — 30 M times per
     * sf0.1 ADC scan (see [[LutCodesDistExpr]]); the double sum itself is

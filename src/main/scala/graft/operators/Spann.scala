@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{dist, RngPrune, ScanTopK, TopKByDistance}
+import graft.sources.IndexStore
 
 /** SPANN-shaped index build + two-stage search — the Spark-native flagship
   * (SURVEY.md §7). Heads (cluster centroids / selected vectors) stay small and
@@ -684,7 +685,7 @@ object Spann {
       idFilter: Option[DataFrame] = None): DataFrame = {
     val cand = candidateHeads(
       queries, heads, internalK, maxDistRatio, metric, wideK, closeRatio)
-    searchFromCandidates(cand, queries, postings, k, metric, headBuckets, idFilter)
+    stage2(cand, queries, postings, k, headBuckets, Payload.exact(metric), idFilter)
   }
 
   /** Stage-2 from PRECOMPUTED stage-1 candidates `(query_id, head_id)` —
@@ -699,74 +700,8 @@ object Spann {
       k: Int,
       metric: String = "l2sq",
       headBuckets: Option[Int] = None,
-      idFilter: Option[DataFrame] = None): DataFrame = {
-    // disk-resident index path: postings carry the IndexStore partition
-    // column `head_bucket`; joining on it lets dynamic partition pruning
-    // skip every bucket the stage-1 candidates don't name — the dataflow
-    // form of the reference's selective posting-page reads
-    // (`ExtraFullGraphSearcher.h:1206-1290`), with no driver-side collect
-    val bucketed = headBuckets.filter(_ => postings.columns.contains("head_bucket"))
-    val cand = bucketed match {
-      case Some(b) =>
-        cand0.withColumn("head_bucket", (col("head_id") % b).cast("int"))
-      case None => cand0
-    }
-    val joinKeys = if (bucketed.isDefined) Seq("head_bucket", "head_id") else Seq("head_id")
-    stage2(cand, postings, queries, joinKeys, k, metric, idFilter)
-  }
-
-  /** Stage-2 proper: probe `postings` with `(query_id, head_id)` candidates,
-    * score, dedup replicas, final top-k.
-    *
-    * `idFilter` (Q4 on the SPANN path — the reference evaluates a metadata
-    * filter per candidate before result insertion): probed posting entries
-    * semi-join the passing id set BEFORE distances are computed and BEFORE
-    * the bounded top-k, so all k slots go to predicate-passing vectors.
-    * Scale: the semi-join keys on `id` against a predicate-pushdown scan of
-    * the corpus — shuffle ∝ probed candidates, and filtered-out entries
-    * never pay a distance kernel. Recall semantics mirror the reference:
-    * postings were built UNFILTERED, so a highly selective predicate thins
-    * per-head candidates — widen `internalK`/`wideK` to compensate, exactly
-    * like the reference's `MaxCheck` advice for filtered search.
-    */
-  private def stage2(
-      cand: DataFrame,
-      postings: DataFrame,
-      queries: DataFrame,
-      joinKeys: Seq[String],
-      k: Int,
-      metric: String,
-      idFilter: Option[DataFrame] = None): DataFrame = {
-    // FUSED probe (r16, guide §1.2/§2.4): when the posting scan is not
-    // partition-pruned (no head_bucket key — the in-memory/checkpointed
-    // index form) and no metadata filter applies, the whole stage-2 —
-    // probe + exact distance + replica-deduped bounded top-k — runs as ONE
-    // aggregate over the posting scan ([[fusedStage2]]).
-    // The stage-1 candidates and the query batch ride inside the aggregate
-    // (both bounded by the batch-query contract), so no joined row is ever
-    // materialized and no per-row group-hash is paid. The bucketed
-    // (disk-resident) form keeps the join: dynamic partition pruning skips
-    // whole posting buckets there, which is worth more than the fusion at
-    // scale; the idFilter form keeps the join for the semi-join pushdown.
-    if (idFilter.isEmpty && joinKeys == Seq("head_id"))
-      return fusedStage2(cand, postings, queries, col("vec"), k)(
-        ScanTopK.Exact(_, metric))
-    val probed = cand.join(postings, joinKeys)
-    val kept = idFilter match {
-      case Some(f) => probed.join(f.select(col("id")), Seq("id"), "left_semi")
-      case None => probed
-    }
-    val hits = kept
-      .join(broadcast(queries), Seq("query_id"))
-      .withColumn("pdist", dist.byName(metric)(col("qvec"), col("vec")))
-    // replica dedup rides INSIDE the bounded top-k (distinct-id buffer):
-    // dist(query, id) is deterministic, so this equals the former
-    // groupBy(query_id, id).min(pdist) pre-pass without its extra
-    // near-unique-key shuffle + hash aggregate pair
-    Knn.explodeRanked(
-      hits.groupBy(col("query_id"))
-        .agg(TopKByDistance.topkDistinct(col("id"), col("pdist"), k).as("nn")))
-  }
+      idFilter: Option[DataFrame] = None): DataFrame =
+    stage2(cand0, queries, postings, k, headBuckets, Payload.exact(metric), idFilter)
 
   /** Two-stage SPANN search in the COMPRESSED domain (Q5 + Q11 integrated —
     * the reference's quantized posting entries, `SPANN/Index.h:46-59`,
@@ -790,101 +725,112 @@ object Spann {
       maxDistRatio: Double = Double.MaxValue,
       metric: String = "l2sq",
       headBuckets: Option[Int] = None,
-      idFilter: Option[DataFrame] = None): DataFrame = {
-    val cand0 = candidateHeads(queries, heads, internalK, maxDistRatio, metric)
-    val bucketed = headBuckets.filter(_ => codedPostings.columns.contains("head_bucket"))
-    val cand = bucketed match {
-      case Some(b) =>
-        cand0.withColumn("head_bucket", (col("head_id") % b).cast("int"))
-      case None => cand0
+      idFilter: Option[DataFrame] = None): DataFrame =
+    stage2(candidateHeads(queries, heads, internalK, maxDistRatio, metric),
+      queries, codedPostings, k, headBuckets, Payload.adc(rcb), idFilter)
+
+  /** What stage-2 scores a posting entry with — the one difference between
+    * full-precision and compressed search (the reference swaps only the
+    * distance when a quantizer is attached, `ExtraFullGraphSearcher.h:
+    * 587-910`). `column` is the posting column read (`vec` or `codes`);
+    * `scorer` builds the fused [[ScanTopK]] scorer from the collected query
+    * vectors; the join form joins `querySide(queries)` and scores each joined
+    * row with `score`.
+    */
+  private[graft] final case class Payload(
+      column: String,
+      scorer: Array[Array[Double]] => ScanTopK.Scorer,
+      querySide: DataFrame => DataFrame,
+      score: Column)
+
+  private[graft] object Payload {
+    /** Exact distance on the full-precision `vec`. */
+    def exact(metric: String): Payload = Payload("vec",
+      ScanTopK.Exact(_, metric), identity,
+      dist.byName(metric)(col("qvec"), col("vec")))
+
+    /** ADC on the stored `codes`: the per-query LUT
+      * ([[graft.functions.PQ.Codebooks.adcLut]] of the rotated query) is
+      * built once per query; each entry then costs `m` table lookups. Both
+      * forms build the LUTs with the same code and sum them left to right,
+      * so fused and join scores are bit-identical (SpannSpec pins it).
+      */
+    def adc(rcb: graft.functions.PQ.RotatedCodebooks): Payload = {
+      import scala.collection.immutable.ArraySeq.unsafeWrapArray
+      def lut(q: Array[Double]) = rcb.cb.adcLut(unsafeWrapArray(rcb.rotate(unsafeWrapArray(q))))
+      Payload("codes", qvecs => ScanTopK.Lut(qvecs.map(lut)),
+        queries => {
+          val bc = queries.sparkSession.sparkContext.broadcast(rcb)
+          val lutUdf = udf((q: Seq[Double]) =>
+            bc.value.cb.adcLut(unsafeWrapArray(bc.value.rotate(q))))
+          queries.select(col("query_id"),
+            lutUdf(col("qvec").cast("array<double>")).as("_lut"))
+        },
+        graft.functions.PQ.lutCodesDist(col("_lut"), col("codes")))
     }
-    val joinKeys = if (bucketed.isDefined) Seq("head_bucket", "head_id") else Seq("head_id")
-    adcStage2(cand, codedPostings, queries, joinKeys, rcb, k, idFilter)
   }
 
-  /** [[searchTwoStageHier]] with the compressed stage-2 — the routed stage-0/1
-    * feeding ADC scoring over stored codes.
+  /** Stage-2 proper, for both payloads: probe `postings` with the
+    * `(query_id, head_id)` candidates, score, dedup replicas, final top-k.
+    *
+    * FUSED form (r16, guide §1.2/§2.4): when the posting scan is not
+    * partition-pruned and no metadata filter applies, probe + score +
+    * replica-deduped bounded top-k run as ONE [[ScanTopK]] over the posting
+    * scan, routed by `head_id` through the stage-1 candidates. The
+    * candidates and the query batch ride inside the aggregate (both bounded
+    * by the batch-query contract), so no joined row is ever materialized.
+    *
+    * JOIN form otherwise:
+    *  - `headBuckets` with postings carrying IndexStore's `head_bucket`
+    *    partition column (a loaded, disk-resident index): the candidates get
+    *    the same bucket and the join runs on `(head_bucket, head_id)`, so
+    *    dynamic partition pruning skips every bucket the candidates don't
+    *    name — the dataflow form of the reference's selective posting-page
+    *    reads (`ExtraFullGraphSearcher.h:1206-1290`), with no driver-side
+    *    collect, worth more than the fusion at scale;
+    *  - `idFilter` (Q4 on the SPANN path — the reference evaluates a
+    *    metadata filter per candidate before result insertion): probed
+    *    entries semi-join the passing id set BEFORE scoring and BEFORE the
+    *    bounded top-k, so all k slots go to predicate-passing vectors and
+    *    filtered-out entries never pay a distance. Postings were built
+    *    UNFILTERED, so a highly selective predicate thins per-head candidates
+    *    — widen `internalK`/`wideK` to compensate, like the reference's
+    *    `MaxCheck` advice for filtered search.
     */
-  def searchTwoStageHierAdc(
-      queries: DataFrame,
-      superHeads: DataFrame,
-      routing: DataFrame,
-      codedPostings: DataFrame,
-      rcb: graft.functions.PQ.RotatedCodebooks,
-      k: Int,
-      internalK: Int,
-      superK: Int,
-      metric: String = "l2sq",
-      idFilter: Option[DataFrame] = None): DataFrame =
-    adcStage2(
-      candidateHeadsHier(queries, superHeads, routing, internalK, superK, metric),
-      codedPostings, queries, Seq("head_id"), rcb, k, idFilter)
-
-  /** Compressed stage-2: the per-query ADC LUT is computed once on the
-    * (broadcast-tiny) query side ([[graft.functions.PQ.Codebooks.adcLut]]);
-    * each probed posting entry costs `m` table lookups. Replica dedup rides
-    * inside the bounded distinct-id top-k exactly as the full-precision
-    * [[stage2]].
-    */
-  private def adcStage2(
+  private[graft] def stage2(
       cand: DataFrame,
-      codedPostings: DataFrame,
       queries: DataFrame,
-      joinKeys: Seq[String],
-      rcb: graft.functions.PQ.RotatedCodebooks,
+      postings: DataFrame,
       k: Int,
-      idFilter: Option[DataFrame] = None): DataFrame = {
-    // FUSED compressed probe (r16, the [[stage2]] fusion with LUT scoring):
-    // unbucketed + unfiltered stage-2 runs as ONE aggregate over the coded
-    // posting scan ([[fusedStage2]] with a LUT scorer); the LUTs are
-    // built by the same adcLut/rotate code the per-query UDF ran, scored
-    // with the same left-to-right sum — bit-identical (SpannSpec pins it).
-    // Bucketed form keeps the DPP join; idFilter keeps the semi-join.
-    if (idFilter.isEmpty && joinKeys == Seq("head_id"))
-      return fusedStage2(cand, codedPostings, queries, col("codes"), k) { qvecs =>
-        ScanTopK.Lut(qvecs.map(q => rcb.cb.adcLut(
-          scala.collection.immutable.ArraySeq.unsafeWrapArray(
-            rcb.rotate(scala.collection.immutable.ArraySeq.unsafeWrapArray(q))))))
-      }
-    val spark = queries.sparkSession
-    val bc = spark.sparkContext.broadcast(rcb)
-    val lutUdf = udf((q: Seq[Double]) => bc.value.cb.adcLut(
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(bc.value.rotate(q))))
-    val withLut = queries
-      .withColumn("_lut", lutUdf(col("qvec").cast("array<double>")))
-      .select(col("query_id"), col("_lut"))
-    val probed = cand.join(codedPostings, joinKeys)
-    // same pre-top-k predicate semi-join as the full-precision stage2:
-    // filtered-out entries never pay the m-lookup LUT scoring
+      headBuckets: Option[Int],
+      payload: Payload,
+      idFilter: Option[DataFrame]): DataFrame = {
+    val bucketed = headBuckets.filter(_ => postings.columns.contains("head_bucket"))
+    if (idFilter.isEmpty && bucketed.isEmpty) {
+      val (qids, qvecs) = ScanTopK.collectQueries(queries)
+      return Knn.explodeRanked(ScanTopK.nearest(postings,
+        Seq(col("head_id"), col("id"), col(payload.column)), qids,
+        payload.scorer(qvecs), ScanTopK.probeRoute(cand, qids), k))
+    }
+    val probed = bucketed match {
+      case Some(b) => IndexStore.withBucket(cand, b)
+        .join(postings, Seq("head_bucket", "head_id"))
+      case None => cand.join(postings, Seq("head_id"))
+    }
     val kept = idFilter match {
       case Some(f) => probed.join(f.select(col("id")), Seq("id"), "left_semi")
       case None => probed
     }
     val hits = kept
-      .join(broadcast(withLut), Seq("query_id"))
-      .withColumn("pdist",
-        graft.functions.PQ.lutCodesDist(col("_lut"), col("codes")))
+      .join(broadcast(payload.querySide(queries)), Seq("query_id"))
+      .withColumn("pdist", payload.score)
+    // replica dedup rides INSIDE the bounded top-k (distinct-id buffer):
+    // the score of (query, id) is deterministic, so this equals a
+    // groupBy(query_id, id).min(pdist) pre-pass without its extra
+    // near-unique-key shuffle + hash aggregate pair
     Knn.explodeRanked(
       hits.groupBy(col("query_id"))
         .agg(TopKByDistance.topkDistinct(col("id"), col("pdist"), k).as("nn")))
-  }
-
-  /** The fused stage-2 shared by [[stage2]] and [[adcStage2]]: probe, score
-    * and replica-deduped bounded top-k as ONE [[ScanTopK]] over the posting
-    * scan, routed by `head_id` through the stage-1 candidates. `payload` is
-    * the posting column the scorer reads (`vec` or `codes`); `scorer`
-    * builds it from the collected query vectors.
-    */
-  private def fusedStage2(
-      cand: DataFrame,
-      postings: DataFrame,
-      queries: DataFrame,
-      payload: Column,
-      k: Int)(scorer: Array[Array[Double]] => ScanTopK.Scorer): DataFrame = {
-    val (qids, qvecs) = ScanTopK.collectQueries(queries)
-    Knn.explodeRanked(ScanTopK.nearest(postings,
-      Seq(col("head_id"), col("id"), payload), qids, scorer(qvecs),
-      ScanTopK.probeRoute(cand, qids), k))
   }
 
   /** Route each head to its `routeReplicas` nearest super-heads — the
@@ -980,7 +926,7 @@ object Spann {
       metric: String = "l2sq",
       idFilter: Option[DataFrame] = None): DataFrame = {
     val cand = candidateHeadsHier(queries, superHeads, routing, internalK, superK, metric)
-    stage2(cand, postings, queries, Seq("head_id"), k, metric, idFilter)
+    stage2(cand, queries, postings, k, None, Payload.exact(metric), idFilter)
   }
 
   /** Resumable two-stage iterator (Q6 over SPANN —

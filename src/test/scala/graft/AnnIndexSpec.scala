@@ -166,6 +166,20 @@ class AnnIndexSpec extends SparkSpec {
       graft.operators.Eval.recallAt(res, exact, 5)).head().getDouble(0)
     assert(rec >= 0.7, s"hier recall $rec")
     assert(flat.search(q, 5).count() === 25)
+    // the hier route serves ADC search too: k rows for every query
+    val adc = hier.trainQuantizer(m = 2, k = 8, maxIter = 1).searchAdc(q, 5)
+      .groupBy("query_id").count().collect()
+    assert(adc.length === 5 && adc.forall(_.getLong(1) == 5), adc.mkString(","))
+    // and filtered search: only passing ids, identical to searching postings
+    // already restricted to them (tombstoning the failing ids restricts the
+    // postings without touching the heads or the routing)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
+    val filtered = rows(hier.searchFiltered(q, 5, col("id") % 2 === 0))
+    assert(filtered.nonEmpty)
+    assert(filtered.forall(_._3 % 2 == 0), s"odd id leaked: $filtered")
+    val restricted = hier.deleteByIds(spark.range(1, 600, 2).toDF("id"))
+    assert(filtered === rows(restricted.search(q, 5)))
   }
 
   test("facade iterator: first batch equals search; deletes never surface (Q6)") {
@@ -451,6 +465,37 @@ class AnnIndexSpec extends SparkSpec {
     val rWide = wide.recall(q, 5)
     assert(rWide >= rFixed,
       s"widened probe must not lower recall ($rFixed -> $rWide)")
+  }
+
+  test("WideK widening flows through searchAdc exactly as through search") {
+    // InternalK=1 widened to W with an unbounded CloseRatio probes the same W
+    // heads as InternalK=W, so both entry points must return the same rows
+    val w = 4
+    val base = freshIndex.build().trainQuantizer(m = 2, k = 8, maxIter = 1)
+    val widened = base.setParameter("InternalK", "1").setParameter("WideK", w.toString)
+      .setParameter("CloseRatio", "1e9")
+    val plain = base.setParameter("InternalK", w.toString)
+    // queries between heads (every 50th id), so the best head distance is > 0
+    val q = Seq(123f, 377f, 611f).zipWithIndex
+      .map { case (v, i) => (i.toLong, Seq.fill(10)(v)) }.toDF("query_id", "qvec")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
+    assert(rows(widened.search(q, 20)) === rows(plain.search(q, 20)))
+    assert(rows(widened.searchAdc(q, 20)) === rows(plain.searchAdc(q, 20)))
+  }
+
+  test("HeadBuckets cannot change under postings bucketed by another count") {
+    val dir = Files.createTempDirectory("graft_annidx_buckets").toString
+    freshIndex.setParameter("HeadBuckets", "8").build().save(s"$dir/idx")
+    val loaded = AnnIndex.load(spark, s"$dir/idx")
+    val e = intercept[IllegalArgumentException](loaded.setParameter("HeadBuckets", "16"))
+    assert(e.getMessage.contains("16") && e.getMessage.contains("8"), e.getMessage)
+    // the saved count itself, other parameters, and an unbucketed in-memory
+    // index are all still settable
+    assert(loaded.setParameter("HeadBuckets", "8").getParameter("HeadBuckets") === "8")
+    assert(loaded.setParameter("InternalK", "4").search(synthQueries(2), 3).count() === 6)
+    assert(freshIndex.build().setParameter("HeadBuckets", "16")
+      .getParameter("HeadBuckets") === "16")
   }
 
   test("rebalance splits/merges postings in place; search stays correct") {

@@ -36,8 +36,13 @@ if [ $? -ne 0 ]; then
   exit 4
 fi
 mv "${TYPES}.tmp" "$TYPES"
-echo "[gate] compare_oracle → $SUMMARY"
-python3 tools/compare_oracle.py "$SF" "$OUT" --jobs 8 \
+# one DuckDB compare worker per 6 GiB of MemAvailable, clamped to 1..8: a
+# fixed 8-worker pool is OOM-killed on a ~15 GB host (every query then reads
+# COMPARE CRASH); this changes only the parallelism, not what is compared
+JOBS=$(awk '/^MemAvailable:/ {j = int($2 / 6291456)} END {print (j < 1 ? 1 : j > 8 ? 8 : j)}' /proc/meminfo 2>/dev/null)
+JOBS=${JOBS:-1}
+echo "[gate] compare_oracle → $SUMMARY (--jobs $JOBS)"
+python3 tools/compare_oracle.py "$SF" "$OUT" --jobs "$JOBS" \
   --summary "${SUMMARY}.tmp" > /tmp/graft_gate_compare.log 2>&1
 if [ ! -f "${SUMMARY}.tmp" ]; then
   echo "[gate] FAIL: compare produced no summary (see /tmp/graft_gate_compare.log)"
